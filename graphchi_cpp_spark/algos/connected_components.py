@@ -8,19 +8,32 @@ neighbor label, iterate to fixpoint), toolkit twin
 sequential; its distributed replacement here is the same min-label
 fixpoint (identical output contract: (vertex, component=min id)).
 
-Spark recipe: symmetrize edges once, then iterate
-    msgs   = edges ⋈ labels(src) → groupBy(dst).agg(min(label))
-    labels = labels ⟕ msgs → least(label, msg)
-with FRONTIER filtering (C4): only vertices whose label changed last
-superstep send messages — after the first few supersteps the frontier
-collapses and each superstep touches a small fraction of E. This is the
-reference's bitset scheduler (``src/engine/bitset_scheduler.hpp:38-110``)
-expressed as a semi-join.
+``min_label_supersteps`` is the one superstep loop behind WCC (over the
+symmetrized edges) and SCC's forward colouring (``algos.scc``, over the
+directed edges). Per superstep:
 
-Scale notes: min is commutative → map-side partial agg bounds shuffle to
-O(active vertices); symmetrized edge table cached once. For graphs with
-giant diameter, use ``connected_components_star`` below — label
-propagation is O(diameter) supersteps, the star contractions O(log² V).
+    msgs  = edges ⋈ frontier(src) → (dst, label)
+    state = (own rows ∪ msgs) → groupBy(id).agg(min(label))
+
+The new label and the "changed" flag come out of ONE grouped min over
+each vertex's own row and its messages — no apply join against the old
+state. Only vertices whose label changed last superstep send messages
+(FRONTIER filtering, C4: the reference's bitset scheduler,
+``src/engine/bitset_scheduler.hpp:38-110``, as a join). Each superstep
+is ONE Spark action: an eager ``localCheckpoint`` (which cuts the
+lineage) whose job also counts the changed vertices through
+``DataFrame.observe`` (``checkpoints.CheckpointJanitor``), so the
+convergence probe costs no job of its own.
+
+Scale notes: min is commutative → map-side partial aggregation bounds
+the shuffle to O(|V| + distinct message targets); the static edge table
+is cached once. Once the change count drops under
+``BCAST_FRONTIER_MAX`` rows the frontier is broadcast into the gather
+join, so the tail supersteps (most of them on high-diameter graphs)
+scan the edge table and probe a small shared map instead of shuffling
+it. For graphs with giant diameter, use ``connected_components_star``
+below — label propagation is O(diameter) supersteps, the star
+contractions O(log² V).
 
 Measured dead end (r4): per-round pointer jumping (label ← label(label)
 via a V-row self-join on the label column) was 5× SLOWER at 10M edges
@@ -34,13 +47,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from graphchi_cpp_spark.checkpoints import CheckpointJanitor
 from graphchi_cpp_spark.graph import PropertyGraph
 
 # Frontier size under which the gather join broadcasts the frontier
-# instead of relying on co-partitioning + a partial-aggregated shuffle.
-# 2M (id,label) rows ≈ a ~120MB hashed relation per executor — cheap
-# against skipping a full shuffle round-trip; at 1000 executors the
-# broadcast fan-out is the cost, so this is rows-based, not |E|-based.
+# instead of shuffling it against the edge table. 2M (id,label) rows ≈
+# a ~120MB hashed relation per executor — cheap against a full shuffle
+# round-trip; at 1000 executors the broadcast fan-out is the cost, so
+# this is rows-based, not |E|-based.
 import os as _os
 
 BCAST_FRONTIER_MAX = int(
@@ -48,118 +62,71 @@ BCAST_FRONTIER_MAX = int(
 )
 
 
-def connected_components(
-    graph: PropertyGraph,
-    max_iter: int = 50,
-    checkpoint_every: int = 4,
+def min_label_supersteps(
+    edges: DataFrame, vertices: DataFrame, max_iter: int
 ) -> DataFrame:
-    """Returns (id, component) where component = min vertex id in the WCC.
+    """(id, label) with label(v) = min id over every u with a path
+    u →* v along ``edges`` (src → dst), v included, for each id in
+    ``vertices``; messages to ids outside ``vertices`` are dropped.
 
-    Physical strategy: partition reuse (see algos.pagerank) — symmetrized
-    edges hash-partitioned by src, labels by id, both cached, so the
-    frontier semi-join, gather join and update join are all
-    co-partitioned: ONE exchange per superstep (the min-message partial
-    aggregation). Lineage is cut (checkpoint + re-cache) every
-    ``checkpoint_every`` supersteps; in between, cache() bounds
-    recomputation while keeping partitioning info.
+    Superstep 0 needs no frontier join: every vertex is active with
+    label == id, so its messages are the edges themselves. The final
+    state stays pinned by the janitor, so the caller can keep reading
+    the returned frame."""
+    jan = CheckpointJanitor(edges.sparkSession)
+    v = vertices.select("id", F.col("id").alias("label"))
+    msgs = edges.select(F.col("dst").alias("id"), F.col("src").alias("label"))
+    for _ in range(max_iter):
+        # own rows carry their label twice; max("own") recovers the old
+        # label (null only for message targets outside the vertex set)
+        v, n_active = jan.checkpoint(
+            v.select("id", "label", F.col("label").alias("own"))
+            .unionByName(msgs.select("id", "label", F.lit(None).alias("own")))
+            .groupBy("id")
+            .agg(F.min("label").alias("label"), F.max("own").alias("own"))
+            .where(F.col("own").isNotNull())
+            .select("id", "label", (F.col("label") < F.col("own")).alias("act")),
+            probe=F.count_if("act"),
+        )
+        if n_active == 0:
+            break
+        frontier = v.filter("act").select(F.col("id").alias("src"), "label")
+        if n_active <= BCAST_FRONTIER_MAX:
+            frontier = F.broadcast(frontier)
+        msgs = edges.join(frontier, "src").select(F.col("dst").alias("id"), "label")
+    return v.select("id", "label")
 
-    Frontier broadcast (hybrid): once the previous superstep's change
-    count drops under ``BCAST_FRONTIER_MAX`` rows, the frontier is
-    broadcast into the gather join — the tail supersteps (most of them,
-    on high-diameter graphs) then run with ZERO shuffled rows: scan the
-    edge cache, probe a small shared map, aggregate dst-locally. Dense
-    early supersteps keep the partial-aggregated shuffle plan, which
-    amortizes better than broadcasting a |V|-row frontier (measured at
-    100M edges: all-broadcast only beat all-shuffle by 15% because the
-    first supersteps' frontier IS the vertex set). The exact change
-    count is read from the already-materialized state cache — same scan
-    the old limit(1) early-exit probe did, one number instead of one bit.
-    """
-    from graphchi_cpp_spark.checkpoints import CheckpointJanitor
+
+def connected_components(graph: PropertyGraph, max_iter: int = 50) -> DataFrame:
+    """Returns (id, component) where component = min vertex id in the WCC:
+    ``min_label_supersteps`` over the symmetrized edges."""
     from graphchi_cpp_spark.partitioning import (
         adaptive_partitions,
         scoped_shuffle_partitions,
     )
 
     spark = graph.edges.sparkSession
-    jan = CheckpointJanitor(spark)
     # partition count derived from the data (guide §2): |E| is one cheap
     # job against the (memoized/checkpointed) edge table; at cluster
     # scale the conf cap binds and p is unchanged
-    n_edges = graph.edges.count()
-    p = adaptive_partitions(spark, 2 * n_edges)
+    p = adaptive_partitions(spark, 2 * graph.edges.count())
     with scoped_shuffle_partitions(spark, p):
-        return _cc_loop(graph, spark, jan, p, max_iter, checkpoint_every)
-
-
-def _cc_loop(graph, spark, jan, p, max_iter, checkpoint_every):
-    e = graph.edges.select("src", "dst")
-    # dedup AFTER the src-repartition: hashpartitioning(src) satisfies
-    # the (src, dst) clustering the dedup aggregate needs, so the
-    # symmetrized table pays ONE exchange instead of two (distinct's
-    # (src,dst) shuffle followed by the src repartition) and the cache
-    # still carries the src partitioning every superstep reuses
-    edges = (
-        e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .repartition(p, "src")
-        .dropDuplicates(["src", "dst"])
-        .cache()
-    )
-    v = (
-        graph.vertices.select("id")
-        .select("id", F.col("id").alias("label"), F.lit(True).alias("act"))
-        .repartition(p, "id")
-        .cache()
-    )
-    n_verts = v.count()
-    n_active = n_verts  # superstep 0: everything is active
-
-    for it in range(max_iter):
-        if it == 0:
-            # superstep 0: every vertex is active and label == id, so
-            # the gather join degenerates to min(src) per dst — the
-            # densest superstep loses its |E|-row join probe entirely
-            # (the shuffle of partial-aggregated mins remains)
-            msgs = edges.groupBy(F.col("dst").alias("id")).agg(
-                F.min("src").alias("m")
+        e = graph.edges.select("src", "dst")
+        # dedup AFTER the src-repartition: hashpartitioning(src)
+        # satisfies the (src, dst) clustering the dedup aggregate needs,
+        # so the symmetrized table pays ONE exchange, and the cache
+        # carries the src partitioning every gather join reuses
+        edges = (
+            e.unionByName(
+                e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
             )
-        else:
-            frontier = v.filter("act").select(F.col("id").alias("src"), "label")
-            if n_active <= BCAST_FRONTIER_MAX:
-                frontier = F.broadcast(frontier)
-            msgs = (
-                edges.join(frontier, "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min("label").alias("m"))
-            )
-        nv = (
-            v.join(msgs, "id", "left")
-            .select(
-                "id",
-                F.least(F.col("label"), F.coalesce("m", F.col("label"))).alias(
-                    "label"
-                ),
-                (F.coalesce("m", F.col("label") + 1) < F.col("label")).alias("act"),
-            )
+            .repartition(p, "src")
+            .dropDuplicates(["src", "dst"])
             .cache()
         )
-        n_active = nv.filter("act").count()
-        v.unpersist()
-        v = nv
-        if n_active == 0:
-            break
-        if (it + 1) % checkpoint_every == 0:
-            # janitor: free the PREVIOUS checkpoint generation's blocks
-            # (plain unpersist can't — see checkpoints.py), and unpersist
-            # the pre-checkpoint state cache instead of leaking it until
-            # driver GC: at 100M-edge scale those leaks are exactly the
-            # block-manager pressure behind multi-x wall-time spread
-            ck = jan.checkpoint(v)
-            v.unpersist()
-            v = ck.repartition(p, "id").cache()
-
-    edges.unpersist()
-    return v.select("id", F.col("label").alias("component"))
+        labels = min_label_supersteps(edges, graph.vertices, max_iter)
+        edges.unpersist()
+    return labels.select("id", F.col("label").alias("component"))
 
 
 def connected_components_star(
@@ -219,12 +186,10 @@ def connected_components_star(
 
 
 def _star_rounds(graph: PropertyGraph, p: int, max_iter: int) -> DataFrame:
-    from graphchi_cpp_spark.checkpoints import CheckpointJanitor
-
     # lineage is cut EVERY round: E is referenced twice per round (self
     # + swap), so anything short of a checkpoint doubles the logical
     # plan per iteration (cache() bounds recomputation, not plan size)
-    # janitor (r11): each round's signature/probe supersedes the previous
+    # janitor (r11): each round's checkpoint supersedes the previous
     # round's edge checkpoint — free those blocks deterministically
     # instead of letting them pile up until the driver's periodic GC
     # (observed: back-to-back 30M-edge runs degrading 49 -> 107s as dead
@@ -263,25 +228,19 @@ def _star_rounds(graph: PropertyGraph, p: int, max_iter: int) -> DataFrame:
             .distinct()
             .repartition(p, "src")
         )
-        # lazy: the signature aggregation below references nE exactly
-        # once and MATERIALIZES the checkpoint in the same job — the
-        # eager variant paid a materialization job, then re-scanned
-        # the same blocks for the signature (two jobs per round)
-        nE = jan.checkpoint_lazy(nE)
-        # fixpoint signature: count + modular hash sum (pmod keeps the
-        # ANSI-mode sum far from long overflow at any edge count)
-        sig = tuple(
-            nE.agg(
-                F.count("*"),
+        # the round's checkpoint job also computes its fixpoint signature:
+        # count + modular hash sums (pmod keeps the ANSI-mode sum far
+        # from long overflow at any edge count); the janitor frees the
+        # previous round's E once nE has landed
+        E, sig = jan.checkpoint(
+            nE,
+            probe=F.struct(
+                F.count(F.lit(1)),
                 F.sum(F.pmod(F.col("src"), F.lit(1_000_000_007))),
                 F.sum(F.pmod(F.col("dst"), F.lit(1_000_000_007))),
                 F.sum(F.pmod(F.xxhash64("src", "dst"), F.lit(1_000_000_007))),
-            ).collect()[0]
+            ),
         )
-        # previous round's E is superseded now that the signature job
-        # materialized nE — free its blocks
-        jan.sweep()
-        E = nE
         if sig == prev_sig:
             break
         prev_sig = sig

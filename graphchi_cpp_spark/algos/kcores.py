@@ -123,28 +123,21 @@ def _hindex_loop(graph, spark, jan, p, max_iter, stats):
             .groupBy(F.col("src").alias("id"))
             .agg(F.max("m").cast("int").alias("h"))
         )
-        # ONE job per iteration: the lazy checkpoint is materialized BY
-        # the change probe (the former eager checkpoint paid a
-        # materialization job, then a probe job over the same blocks;
-        # before that, cache-then-checkpoint ran the plan twice). chg
-        # rides the checkpoint as a 1-byte column; the probe's filter
-        # sits above the checkpointed RDD, so its count computes and
-        # persists every partition.
-        nc = jan.checkpoint_lazy(
-            c.join(h, "id", "left")
-            .select(
+        # ONE job per iteration: the eager checkpoint's job also counts
+        # the changed vertices (observe probe on the 1-byte chg column)
+        nc, n_changed = jan.checkpoint(
+            c.join(h, "id", "left").select(
                 "id",
                 F.least(F.col("c"), F.coalesce("h", F.lit(0))).alias("c"),
                 (F.least(F.col("c"), F.coalesce("h", F.lit(0))) != F.col("c")).alias(
                     "chg"
                 ),
-            )
+            ),
+            probe=F.count_if("chg"),
         )
-        changed = nc.filter("chg").count() > 0
-        jan.sweep()
         c.unpersist()
         c = nc.drop("chg")
-        if not changed:
+        if n_changed == 0:
             break
 
     e.unpersist()

@@ -9,8 +9,11 @@ forward phase ``:154-``, backward ``:227-267``, loop ``:344-357``,
 edge deletions via ``SUPPORT_DELETIONS`` ``:34``).
 
 Spark recipe per round (classic distributed FW-BW-coloring):
+0. trim: vertices with no in- or no out-edge in the remaining graph are
+   singleton SCCs; drop them until none is left (FW-BW-Trim).
 1. color(v) = min vertex id reachable *backward*: propagate min id along
-   out-edges to fixpoint (a WCC-style frontier loop on the directed graph).
+   out-edges to fixpoint — ``connected_components.min_label_supersteps``,
+   the same loop that runs WCC, on the directed edges.
 2. Within each color class, compute B = vertices that can reach the
    color's root going backward (propagate a 'confirmed' flag from the
    root along REVERSED edges, but only across same-color vertices).
@@ -18,62 +21,29 @@ Spark recipe per round (classic distributed FW-BW-coloring):
    (anti-join — the relational analog of the reference's tombstone
    deletions, C8), repeat until no vertices remain.
 
-Each phase is a Pregel-style frontier loop; edges shrink every round.
-Trivial SCCs (sources/sinks after trimming) fall out naturally when a
-vertex is its own color root and nothing else confirms.
+Every materialization is one eager ``localCheckpoint`` whose job also
+counts its rows through ``DataFrame.observe`` (``checkpoints``): the
+trim, wave and remaining-set probes cost no job of their own. The
+remaining vertex set and edge table go through janitors, which free
+each superseded generation. Vertices that are never part of a colored
+SCC (trimmed ones included) are singletons: component = id.
 
 Scale note: worst case O(rounds · E); real graphs finish in few rounds
-(giant SCC + periphery). Edges are re-checkpointed per round.
+(giant SCC + periphery).
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, functions as F
 
+from graphchi_cpp_spark.algos.connected_components import (
+    BCAST_FRONTIER_MAX,
+    min_label_supersteps,
+)
+from graphchi_cpp_spark.checkpoints import CheckpointJanitor, materialize
 from graphchi_cpp_spark.graph import PropertyGraph
-
-
-def _propagate_min(edges: DataFrame, vertices: DataFrame, max_iter: int = 100) -> DataFrame:
-    """min-id propagation along edge direction: color(v) = min(id(u)) over
-    u with a directed path u →* v (including v). Frontier-optimized, with
-    the WCC hybrid: once the active set fits the broadcast row cap the
-    gather join probes a broadcast frontier map instead of shuffling the
-    (stats-less, checkpointed) edge table every superstep."""
-    from graphchi_cpp_spark.algos.connected_components import BCAST_FRONTIER_MAX
-    from graphchi_cpp_spark.checkpoints import CheckpointJanitor
-
-    jan = CheckpointJanitor(edges.sparkSession)
-    v = vertices.select("id", F.col("id").alias("color"), F.lit(True).alias("act"))
-    # lazy: the count below materializes the checkpoint in the same job
-    v = v.localCheckpoint(eager=False)
-    n_active = v.count()
-    for _ in range(max_iter):
-        frontier = v.filter("act").select(F.col("id").alias("src"), "color")
-        if n_active <= BCAST_FRONTIER_MAX:
-            frontier = F.broadcast(frontier)
-        msgs = (
-            edges.join(frontier, "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("color").alias("m"))
-        )
-        # job folding: the lazy checkpoint is materialized BY the
-        # active-count probe (one job per superstep; the eager variant
-        # paid a checkpoint job plus a probe job over the same blocks).
-        # The probe references v exactly once — checkpoint_lazy contract.
-        v = jan.checkpoint_lazy(
-            v.join(msgs, "id", "left").select(
-                "id",
-                F.least(F.col("color"), F.coalesce("m", F.col("color"))).alias("color"),
-                (F.coalesce("m", F.col("color") + 1) < F.col("color")).alias("act"),
-            )
-        )
-        n_active = v.filter("act").count()
-        jan.sweep()
-        if n_active == 0:
-            break
-    # the final generation's blocks stay alive (the janitor only frees
-    # superseded generations), so the caller can keep reading this view
-    return v.select("id", "color")
 
 
 def strongly_connected_components(
@@ -93,168 +63,114 @@ def strongly_connected_components(
         return _scc_rounds(graph, max_rounds)
 
 
+def _b(df, small):
+    # |V|-bounded vertex sets broadcast into joins against the edge
+    # table under the shared frontier cap (stats-less checkpointed
+    # inputs would otherwise shuffle the edge table each rewrite)
+    return F.broadcast(df) if small else df
+
+
+def _within(edges, ids, small):
+    """Edges with both endpoints in ``ids``."""
+    return (
+        edges.join(_b(ids.withColumnRenamed("id", "src"), small), "src", "left_semi")
+        .join(_b(ids.withColumnRenamed("id", "dst"), small), "dst", "left_semi")
+    )
+
+
 def _scc_rounds(graph: PropertyGraph, max_rounds: int) -> DataFrame:
-    from graphchi_cpp_spark.algos.connected_components import BCAST_FRONTIER_MAX
-
-    edges = graph.edges.select("src", "dst").distinct().localCheckpoint(eager=True)
-    # lazy: the round-top count materializes it in the same job
-    remaining = graph.vertices.select("id").localCheckpoint(eager=False)
-    assigned_parts: list[DataFrame] = []
-
-    def _b(df, small):
-        # |V|-bounded vertex sets broadcast into joins against the edge
-        # table under the shared frontier cap (stats-less checkpointed
-        # inputs would otherwise shuffle the edge table each rewrite)
-        return F.broadcast(df) if small else df
+    spark = graph.edges.sparkSession
+    jan_v, jan_e = CheckpointJanitor(spark), CheckpointJanitor(spark)
+    vertices, n_remaining = materialize(graph.vertices.select("id"), probe=F.count("*"))
+    small_v = n_remaining <= BCAST_FRONTIER_MAX
+    remaining = vertices
+    edges = jan_e.checkpoint(graph.edges.select("src", "dst").distinct())
+    parts: list[DataFrame] = []
 
     for _ in range(max_rounds):
-        n_remaining = remaining.count()
         if n_remaining == 0:
             break
         small = n_remaining <= BCAST_FRONTIER_MAX
-        # 0. trim: vertices with no in- or no out-edges in the remaining
-        #    graph are singleton SCCs (kills chains/DAG periphery fast —
-        #    the standard FW-BW-Trim step)
-        n_left = n_remaining
+        # 0. trim: keep the vertices with both an in- and an out-edge
         while True:
-            srcs = edges.select(F.col("src").alias("id")).distinct()
             dsts = edges.select(F.col("dst").alias("id")).distinct()
-            nontrivial = srcs.join(_b(dsts, small), "id", "left_semi")
-            # job folding: the count materializes the lazy checkpoint in
-            # the same job (was an eager-checkpoint job + a limit(1)
-            # probe job over its blocks)
-            trivial = remaining.join(
-                _b(nontrivial, small), "id", "left_anti"
-            ).localCheckpoint(eager=False)
-            n_trivial = trivial.count()
-            if n_trivial == 0:
+            nontrivial = (
+                edges.select(F.col("src").alias("id"))
+                .distinct()
+                .join(_b(dsts, small), "id", "left_semi")
+            )
+            remaining, n_left = jan_v.checkpoint(
+                remaining.join(_b(nontrivial, small), "id", "left_semi"),
+                probe=F.count("*"),
+            )
+            if n_left == n_remaining:
                 break
-            n_left -= n_trivial
-            # lazy projection over the materialized blocks — the former
-            # eager re-checkpoint of the same rows was one full extra
-            # job per trim round for a column rename
-            assigned_parts.append(
-                trivial.select("id", F.col("id").alias("component"))
-            )
-            # lazy: the next consumer (the following trim probe's count,
-            # or _propagate_min's superstep-0 count) references it once
-            # and materializes it in its own job
-            remaining = remaining.join(
-                _b(trivial, small), "id", "left_anti"
-            ).localCheckpoint(eager=False)
-            # edges stays EAGER: the next trim probe reads it twice
-            # (srcs + dsts subtrees of one job) — an unmaterialized lazy
-            # checkpoint would compute the rewrite once per consumer
-            edges = (
-                edges.join(
-                    _b(trivial.withColumnRenamed("id", "src"), small),
-                    "src",
-                    "left_anti",
-                )
-                .join(
-                    _b(trivial.withColumnRenamed("id", "dst"), small),
-                    "dst",
-                    "left_anti",
-                )
-                .select("src", "dst")
-                .localCheckpoint(eager=True)
-            )
-        # trivial ⊆ remaining and both are duplicate-free, so the counts
-        # already taken replace the former remaining.limit(1).count()
-        # probe job per round
-        if n_left == 0:
+            n_remaining = n_left
+            edges = jan_e.checkpoint(_within(edges, remaining, small))
+        if n_remaining == 0:
             break
         # 1. forward coloring from min ids
-        colors = _propagate_min(edges, remaining)
+        colors = min_label_supersteps(edges, remaining, max_iter=100)
         # 2. backward confirmation within color classes: root reaches v
         #    along reversed edges staying inside the color class
-        rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ec = (
-            rev.join(
-                _b(
-                    colors.withColumnRenamed("id", "src").withColumnRenamed(
-                        "color", "c_src"
-                    ),
-                    small,
-                ),
-                "src",
-            )
-            .join(
-                _b(
-                    colors.withColumnRenamed("id", "dst").withColumnRenamed(
-                        "color", "c_dst"
-                    ),
-                    small,
-                ),
-                "dst",
-            )
+        c_src = colors.select(F.col("id").alias("src"), F.col("label").alias("c_src"))
+        c_dst = colors.select(F.col("id").alias("dst"), F.col("label").alias("c_dst"))
+        ec = materialize(
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+            .join(_b(c_src, small), "src")
+            .join(_b(c_dst, small), "dst")
             .filter(F.col("c_src") == F.col("c_dst"))
             .select("src", "dst")
-            .localCheckpoint(eager=True)
         )
-        # confirmed accumulates as a LAZY union of the eagerly-
-        # checkpointed waves: the former per-wave re-checkpoint of the
-        # whole confirmed set re-materialized O(|SCC|) rows every wave
-        # (one extra full job per wave); the anti-join/semi-join readers
-        # scan the same checkpointed blocks either way
-        from graphchi_cpp_spark.algos.connected_components import (
-            BCAST_FRONTIER_MAX,
+        # confirmed accumulates as a lazy union of the checkpointed
+        # waves: the anti-/semi-join readers scan the same blocks as a
+        # re-checkpointed copy would, without one extra job per wave
+        confirmed, n_confirmed = materialize(
+            colors.filter(F.col("id") == F.col("label")).select("id"),
+            probe=F.count("*"),
         )
-
-        # job folding (this wave loop is wave-per-job on long chains —
-        # the count materializes each lazy checkpoint, halving per-wave
-        # jobs vs eager-checkpoint + count over the same blocks)
-        confirmed = colors.filter(F.col("id") == F.col("color")).select(
-            "id"
-        ).localCheckpoint(eager=False)
         frontier = confirmed
-        n_confirmed = confirmed.count()
         while True:
             f_side = frontier.withColumnRenamed("id", "src")
             c_side = confirmed
             if n_confirmed <= BCAST_FRONTIER_MAX:
                 # frontier ⊆ confirmed, so one cap covers both sides
                 f_side, c_side = F.broadcast(f_side), F.broadcast(c_side)
-            nxt = (
+            frontier, n = materialize(
                 ec.join(f_side, "src", "left_semi")
                 .select(F.col("dst").alias("id"))
                 .distinct()
-                .join(c_side, "id", "left_anti")
-                .localCheckpoint(eager=False)
+                .join(c_side, "id", "left_anti"),
+                probe=F.count("*"),
             )
-            n = nxt.count()
             if n == 0:
                 break
-            confirmed = confirmed.unionByName(nxt)
+            confirmed = confirmed.unionByName(frontier)
             n_confirmed += n
-            frontier = nxt
-        scc = colors.join(_b(confirmed, small), "id", "left_semi").select(
-            "id", F.col("color").alias("component")
-        )
-        assigned_parts.append(scc.localCheckpoint(eager=True))
-        scc = assigned_parts[-1]
-        # 3. remove assigned vertices and their edges (remaining lazy —
-        #    the next round-top count references it once and materializes)
-        remaining = remaining.join(
-            _b(scc.select("id"), small), "id", "left_anti"
-        ).localCheckpoint(eager=False)
-        edges = (
-            edges.join(
-                _b(scc.select(F.col("id").alias("src")), small), "src", "left_anti"
+        # 3. assign the colored SCCs; drop their vertices and edges
+        scc = materialize(
+            colors.join(_b(confirmed, small), "id", "left_semi").select(
+                "id", F.col("label").alias("component")
             )
-            .join(
-                _b(scc.select(F.col("id").alias("dst")), small), "dst", "left_anti"
-            )
-            .select("src", "dst")
-            .localCheckpoint(eager=True)
         )
+        parts.append(scc)
+        remaining, n_remaining = jan_v.checkpoint(
+            remaining.join(_b(scc.select("id"), small), "id", "left_anti"),
+            probe=F.count("*"),
+        )
+        edges = jan_e.checkpoint(_within(edges, remaining, small))
 
-    if not assigned_parts:
-        return graph.edges.sparkSession.createDataFrame([], "id long, component long")
-    out = assigned_parts[0]
-    for p in assigned_parts[1:]:
-        out = out.unionByName(p)
-    return out
+    # assigned = every vertex not left over after max_rounds
+    done = (
+        vertices
+        if n_remaining == 0
+        else vertices.join(_b(remaining, small_v), "id", "left_anti")
+    )
+    if not parts:
+        return done.select("id", F.col("id").alias("component"))
+    return done.join(
+        _b(reduce(DataFrame.unionByName, parts), small_v), "id", "left"
+    ).select("id", F.coalesce("component", "id").alias("component"))
 
 
 def scc_sql(edges_sql: str, vertices_sql: str | None = None) -> str:

@@ -78,6 +78,35 @@ def test_wcc_matches_python_union_find(spark_global, edges):
     assert got == want
 
 
+@settings(max_examples=8, deadline=None)
+@given(
+    st.lists(
+        st.tuples(st.integers(0, 15), st.integers(0, 15)),
+        min_size=1,
+        max_size=40,
+    )
+)
+def test_scc_matches_networkx(spark_global, edges):
+    """FW-BW-Trim SCC == networkx's Tarjan-based SCCs (min id per
+    component) on random small digraphs."""
+    import networkx as nx
+
+    from graphchi_cpp_spark.algos.scc import strongly_connected_components
+    from graphchi_cpp_spark.graph import PropertyGraph
+
+    edges = [(a, b) for a, b in edges if a != b]
+    if not edges:
+        return
+    df = spark_global.createDataFrame(edges, "src long, dst long")
+    got = {
+        r["id"]: r["component"]
+        for r in strongly_connected_components(PropertyGraph.from_edges(df)).collect()
+    }
+    g = nx.DiGraph(edges)
+    want = {v: min(c) for c in nx.strongly_connected_components(g) for v in c}
+    assert got == want
+
+
 @settings(max_examples=6, deadline=None)
 @given(
     st.lists(
