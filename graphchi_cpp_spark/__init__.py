@@ -4,12 +4,16 @@ Re-expresses the full capability surface of GraphChi (graphchi-cpp, OSDI'12
 Parallel Sliding Windows engine) on top of Spark DataFrames:
 
 - Property graph = vertex/edge DataFrames (``graph.PropertyGraph``).
-- The single computation primitive (reference
-  ``src/api/graphchi_program.hpp:87`` update(v, ctx)) becomes a BSP
-  aggregate-messages / Pregel loop (``pregel.Pregel``) built from
-  join + groupBy().agg(), with Catalyst optimizing every superstep.
-- Algorithms (PageRank, WCC, SCC, LPA, triangles, k-cores, MSF, random
-  walks, ...) are thin recipes over that substrate (``algos/``).
+- The reference's update(v, ctx) (``src/api/graphchi_program.hpp:87``)
+  becomes a BSP superstep built from join + groupBy().agg(), with
+  Catalyst optimizing every superstep. Shared superstep loops run the
+  min-label algorithms (WCC and SCC's colouring:
+  ``algos.connected_components.min_label_supersteps``) and the
+  sum-propagation ones (batch and streaming PageRank:
+  ``algos.pagerank.pagerank_supersteps``); the other algorithms in
+  ``algos/`` (LPA, triangles, k-cores, MSF, random walks, ...) write
+  their own loops. ``pregel.Pregel`` is the general aggregate-messages
+  API, exercised by its tests; no production algorithm runs on it.
 - The collaborative-filtering toolkit (ALS, item-CF, baselines,
   recommendations, eval) lives in ``cf/``.
 - Sources/sinks for the reference's text formats in ``sources/``.

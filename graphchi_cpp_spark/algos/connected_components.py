@@ -55,11 +55,7 @@ from graphchi_cpp_spark.graph import PropertyGraph
 # a ~120MB hashed relation per executor — cheap against a full shuffle
 # round-trip; at 1000 executors the broadcast fan-out is the cost, so
 # this is rows-based, not |E|-based.
-import os as _os
-
-BCAST_FRONTIER_MAX = int(
-    _os.environ.get("SPARK_GRAFT_WCC_BCAST_MAX_FRONTIER", 2_000_000)
-)
+BCAST_FRONTIER_MAX = 2_000_000
 
 
 def min_label_supersteps(

@@ -102,7 +102,7 @@ def _msf_loop(
     from graphchi_cpp_spark.partitioning import broadcast_row_cap
 
     # byte-derived cap: a (comp, p) map row hashes at ~64 B
-    bcast_parent_max = broadcast_row_cap(64, "SPARK_GRAFT_MSF_BCAST_MAX_COMP")
+    bcast_parent_max = broadcast_row_cap(spark0, 64)
     for rnd in range(max_rounds):
         # per component, pick the cheapest outgoing edge straight off the
         # labeled table (cross-component by invariant: relabeling drops

@@ -10,265 +10,145 @@ with RANDOMRESETPROB = 0.15. Dangling mass is NOT redistributed (the
 reference broadcasts ``rank/outc`` only when outc > 0, pagerank.cpp:100) —
 we match that exactly so results are oracle-comparable.
 
-Two physical strategies, chosen by vertex count (``mode='auto'``):
+One loop, :func:`pagerank_supersteps`, runs batch PageRank and every
+batch of streaming PageRank (``streaming.ingest.run_streaming_pagerank``
+warm-starts it from the previous ranks, as
+``example_apps/streaming_pagerank.cpp:231-298`` re-runs the same update).
+It caches the edge layout once, derives the (id, outdeg, rank) state in
+one probed checkpoint that also counts |V|, and runs one superstep body
 
-- **broadcast** (|V| ≤ ``SPARK_GRAFT_PR_BCAST_MAX_VERTS``, default 50M):
-  edges are hash-partitioned by ``dst`` and cached once; each superstep
-  broadcasts the (src, rank/outdeg) contribution table (one (long,
-  double) row per vertex) and the plan becomes
+    contrib = v → (src, rank/outdeg)
+    msgs    = edges ⋈ contrib → groupBy(dst).sum
+    v'      = v ⟕ msgs → RESET + DAMPING * sum
 
-      msgs = edges ⋈_bcast contrib → groupBy(dst).sum   [NO exchange:
-             edges are already dst-partitioned]
-      ranks = v ⟕ msgs                                  [NO exchange:
-             both hash-partitioned by id with the same partitioner]
+under a shuffle conf scoped to the layout's partition count (a cache
+with fewer partitions than the conf is re-shuffled every superstep).
 
-  → ZERO shuffled rows per superstep. Measured at 100M edges/10M
-  vertices on local[32]: 3.2× less task-CPU than the co-partitioned
-  shuffle plan (479 vs 1544 task-seconds for 3 supersteps) and the
-  run-to-run spread collapses (33.5/33.8/42.0s vs 25–158s), because the
-  per-superstep 100M-row SMJ sort + partial-agg (1.5M-entry hash maps
-  per task) + 1.2G shuffle are all gone — the superstep is one cache
-  scan probing a shared read-only broadcast map into a dst-clustered
-  final aggregation. Float caveat: per-dst summation order differs from
-  the shuffle plan's, so ranks can differ at the 1e-15 level (both are
-  valid IEEE sums; the oracle contract rounds to 4 digits).
-- **shuffle** (above the threshold): the r4 co-partitioned plan — edges
-  by src, vertex state by id, same partition count, one exchange per
-  superstep (the message partial-aggregation). This is the 100 TB
-  path: broadcasting |V| rows to every executor scales as
-  |V|·n_executors network bytes per superstep (the GraphX lesson), so
-  past ~50M vertices — or on memory-tight executors; lower the env —
-  co-partitioned shuffle wins. At cluster scale the same layout comes
-  from bucketing the edge table by src at write time.
+One plan rule, |V| ≤ ``broadcast_row_cap(spark, 64)`` (≈33M vertices on a
+16 GiB heap):
+
+- **broadcast**: edges hash-partitioned by ``dst``; contrib is broadcast,
+  so the gather join and the ``groupBy(dst)`` need no exchange of edge
+  rows — one |V|-row exchange per superstep at the write-back join.
+  Measured at 100M edges/10M vertices on local[32]: 3.2× less task-CPU
+  than the shuffle plan. The broadcast re-executes v's lineage, so each
+  superstep is one eager janitor checkpoint.
+- **join** (above the cap, where broadcasting |V| rows to every executor
+  costs more than one shuffle of them — the GraphX lesson): edges
+  hash-partitioned by ``src`` so the gather join only moves contrib.
+  Supersteps chain lazily and share shuffle map stages, cut every 3
+  (v appears twice per step, so an uncut chain doubles the plan each
+  step) and at the end.
+
+With ``tol`` every superstep is a checkpoint whose own job also sums
+|rank - old| (the C3 convergence delta) via ``DataFrame.observe``.
+
+Streaming used to take the join plan below 5M edges, from a measurement
+of broadcast supersteps 2.3× slower at 40k edges; that branch left the
+shuffle conf unscoped, so its p = 1 edge cache was re-shuffled to the
+session's partition count every superstep. Scoped, streaming runs the
+batch plan, and on a 100k-edge R-MAT stream it takes fewer jobs and less
+task-CPU than the join plan it replaced. Float caveat: per-dst
+summation order differs between the plans, so ranks can differ at the
+1e-15 level (the oracle contract rounds to 4 digits).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
 
+from graphchi_cpp_spark.checkpoints import CheckpointJanitor
 from graphchi_cpp_spark.graph import PropertyGraph
+from graphchi_cpp_spark.partitioning import (
+    adaptive_partitions,
+    broadcast_row_cap,
+    scoped_shuffle_partitions,
+)
 
 RESET = 0.15
 DAMPING = 0.85
-
-# Above this many vertices the per-superstep contribution broadcast
-# (~64 bytes/row hashed-relation footprint, times one copy per executor)
-# stops being cheaper than one shuffle of |V| message rows. Default is
-# byte-derived from the session heap (partitioning.broadcast_row_cap:
-# 16g local driver → 2 GiB budget → ~33M rows, which keeps the measured
-# 30M-vertex/300M-edge broadcast path); tune DOWN for memory-tight
-# executors via SPARK_GRAFT_PR_BCAST_MAX_VERTS or the budget env.
-from graphchi_cpp_spark.partitioning import broadcast_row_cap as _brc
-
-BCAST_MAX_VERTS = _brc(64, "SPARK_GRAFT_PR_BCAST_MAX_VERTS")
+# join-plan supersteps chained lazily between lineage cuts
+CHAIN = 3
 
 
 def pagerank(
-    graph: PropertyGraph,
-    max_iter: int = 3,
-    tol: float | None = None,
-    checkpoint_every: int = 4,
-    mode: str = "auto",
+    graph: PropertyGraph, max_iter: int = 3, tol: float | None = None
 ) -> DataFrame:
     """Returns (id, rank). Fixed-iteration when tol is None (matches the
-    reference's ``niters`` mode); convergence-delta early stop (C3) when
-    tol is given. ``mode``: 'auto' (vertex-count threshold), 'broadcast',
-    or 'shuffle' — see module docstring for the physical plans.
-    """
-    if mode not in ("auto", "broadcast", "shuffle"):
-        raise ValueError(f"unknown pagerank mode {mode!r}")
-    from graphchi_cpp_spark.partitioning import (
-        adaptive_partitions,
-        scoped_shuffle_partitions,
-    )
-
-    spark = graph.edges.sparkSession
-    # data-derived partition count (guide §2); conf cap binds at scale
-    p = adaptive_partitions(spark, graph.edges.count())
-    with scoped_shuffle_partitions(spark, p):
-        return _pagerank_modes(
-            graph, spark, p, max_iter, tol, checkpoint_every, mode
-        )
+    reference's ``niters`` mode); stops early once the summed rank change
+    of a superstep falls below ``tol`` (C3) otherwise."""
+    return pagerank_supersteps(graph.edges, graph.edges.count(), max_iter, tol)
 
 
-def _pagerank_modes(graph, spark, p, max_iter, tol, checkpoint_every, mode):
-    if mode != "shuffle":
-        # the broadcast plan wants dst-partitioned edges; build the
-        # vertex state first so auto mode can count |V| (the count
-        # doubles as the eager materialization both modes need anyway)
-        edges = graph.edges.select("src", "dst").repartition(p, "dst").cache()
-        g = PropertyGraph(edges)
-        out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-            F.count("*").cast("double").alias("outdeg")
-        )
-        v = (
-            g.vertices.select("id")
-            .join(out_deg, "id", "left")
-            .select(
-                "id",
-                F.coalesce("outdeg", F.lit(0.0)).alias("outdeg"),
-                F.lit(1.0).alias("rank"),
-            )
-            .repartition(p, "id")
-            .cache()
-        )
-        n_verts = v.count()
-        if mode == "broadcast" or n_verts <= BCAST_MAX_VERTS:
-            return _pagerank_broadcast(
-                spark, edges, v, p, max_iter=max_iter, tol=tol
-            )
-        # auto fell through to shuffle: drop the dst layout
-        edges.unpersist()
-        v.unpersist()
-
-    return _pagerank_shuffle(
-        spark, graph, p, max_iter=max_iter, tol=tol, checkpoint_every=checkpoint_every
-    )
-
-
-def _pagerank_broadcast(
-    spark, edges: DataFrame, v: DataFrame, p: int, max_iter: int, tol: float | None
-) -> DataFrame:
-    """Zero-shuffle supersteps: broadcast contrib, dst-local aggregation,
-    co-partitioned write-back. ``v`` arrives cached + materialized.
-
-    Each superstep is materialized EAGERLY with localCheckpoint: the
-    contrib broadcast and the write-back join both reference the
-    previous state, so an uncut lineage doubles per superstep — the
-    LOGICAL plan (and its explain string) grows 2^iters even though
-    caches keep execution linear; on inputs that already carry deep
-    lineage (e.g. a streamed/compacted DynamicGraph) plan analysis
-    alone OOMs. The checkpoint costs one |V|-row exchange per superstep
-    at the write-back join (checkpointed scans lose outputPartitioning)
-    — still zero |E|-row shuffles, which is where the win lives.
-
-    Each superstep's checkpoint blocks are freed explicitly once the
-    next generation lands (CheckpointJanitor): DataFrame.unpersist does
-    not release a checkpointed RDD, so long tol-mode runs would
-    otherwise accrete ~|V| rows of storage per superstep until the
-    driver's ContextCleaner got around to it.
-    """
-    from graphchi_cpp_spark.checkpoints import CheckpointJanitor
-
-    jan = CheckpointJanitor(spark)
-    for _ in range(max_iter):
-        contrib = v.select(
-            F.col("id").alias("src"),
-            F.try_divide(F.col("rank"), F.col("outdeg")).alias("w"),
-        )
-        msgs = (
-            edges.join(F.broadcast(contrib), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("w").alias("_s"))
-        )
-        nv = (
-            v.join(msgs, "id", "left")
-            .select(
-                "id",
-                "outdeg",
-                (
-                    F.lit(RESET) + F.lit(DAMPING) * F.coalesce("_s", F.lit(0.0))
-                ).alias("rank"),
-            )
-        )
-        nv = jan.checkpoint(nv)
-        if tol is not None:
-            delta = (
-                nv.join(v.select("id", F.col("rank").alias("_old")), "id")
-                .agg(F.sum(F.abs(F.col("rank") - F.col("_old"))).alias("d"))
-                .collect()[0]["d"]
-            )
-        v.unpersist()
-        v = nv
-        if tol is not None and delta is not None and delta < tol:
-            break
-    edges.unpersist()
-    return v.select("id", "rank")
-
-
-def _pagerank_shuffle(
-    spark,
-    graph: PropertyGraph,
-    p: int,
+def pagerank_supersteps(
+    edges: DataFrame,
+    n_edges: int,
     max_iter: int,
-    tol: float | None,
-    checkpoint_every: int,
+    tol: float | None = None,
+    ranks: DataFrame | None = None,
 ) -> DataFrame:
-    """PARTITION-REUSE shuffle plan: edges hash-partitioned by src and
-    the vertex state by id with the SAME partition count, both cached
-    (cache, not checkpoint: InMemoryRelation preserves
-    outputPartitioning, a checkpointed RDD scan does not). The per-
-    superstep gather join and the update join are then both
-    co-partitioned, leaving exactly ONE exchange per superstep (the
-    message partial-aggregation) — the relational equivalent of
-    GraphChi's "in-edges of an interval live in one shard" layout, and
-    ~2x faster than the naive plan at 10M edges.
-    """
-    edges = (
-        graph.edges.select("src", "dst").repartition(p, "src").cache()
-    )
-    g = PropertyGraph(edges)
-    out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").cast("double").alias("outdeg")
-    )
-    v = (
-        g.vertices.select("id")
-        .join(out_deg, "id", "left")
-        .select(
-            "id",
-            F.coalesce("outdeg", F.lit(0.0)).alias("outdeg"),
-            F.lit(1.0).alias("rank"),
-        )
-        .repartition(p, "id")
-        .cache()
-    )
-    # caches stay lazy: the first action (delta collect in tol mode, the
-    # final count otherwise) materializes edges+v once and reuses them
-    lazy_states: list[DataFrame] = []  # supersteps deferred to one final job
-    for it in range(max_iter):
-        msgs = (
-            edges.join(v.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.try_divide(F.col("rank"), F.col("outdeg"))).alias("_s"))
-        )
-        nv = v.join(msgs, "id", "left").select(
-            "id",
-            "outdeg",
-            (
-                F.lit(RESET) + F.lit(DAMPING) * F.coalesce("_s", F.lit(0.0))
-            ).alias("rank"),
-        )
-        if tol is not None:
-            nv = nv.cache()
-            delta = (
-                nv.join(v.select("id", F.col("rank").alias("_old")), "id")
-                .agg(F.sum(F.abs(F.col("rank") - F.col("_old"))).alias("d"))
-                .collect()[0]["d"]
+    """Up to ``max_iter`` supersteps over ``edges`` (src, dst), whose row
+    count the caller passes; vertices start at ``ranks`` (id, rank) where
+    given, else at 1. Returns (id, rank) as a checkpointed frame."""
+    spark = edges.sparkSession
+    p = adaptive_partitions(spark, n_edges)
+    jan = CheckpointJanitor(spark)
+    layout = edges.select("src", "dst").repartition(p, "dst").cache()
+    try:
+        with scoped_shuffle_partitions(spark, p):
+            # vertex set and out-degrees in one aggregation: every edge
+            # counts 1 for its src and 0 for its dst
+            v = (
+                layout.select(F.col("src").alias("id"), F.lit(1.0).alias("o"))
+                .unionByName(
+                    layout.select(F.col("dst").alias("id"), F.lit(0.0).alias("o"))
+                )
+                .groupBy("id")
+                .agg(F.sum("o").alias("outdeg"))
             )
-            v.unpersist()
-            v = nv
-            if delta is not None and delta < tol:
-                break
-        else:
-            # fixed-iteration mode: no per-superstep action — the chained
-            # supersteps collapse into ONE job at the final materialization
-            # (the duplicated subtrees share shuffle map stages, so unlike
-            # the broadcast plan, lazy chaining does not re-execute work)
-            lazy_states.append(v)
-            v = nv
-        if checkpoint_every > 0 and (it + 1) % checkpoint_every == 0:
-            # lineage cut cadence, honored exactly as passed; the default
-            # (4) trades a slightly deeper plan for fewer materializations
-            v = v.localCheckpoint(eager=True).repartition(p, "id").cache()
+            if ranks is None:
+                v = v.withColumn("rank", F.lit(1.0))
+            else:  # warm start: carry previous ranks, new vertices start at 1
+                v = v.join(ranks.select("id", "rank"), "id", "left").select(
+                    "id", "outdeg", F.coalesce("rank", F.lit(1.0)).alias("rank")
+                )
+            v, n_verts = jan.checkpoint(v, probe=F.count("*"))
+            bcast = n_verts <= broadcast_row_cap(spark, 64)
+            if not bcast:
+                layout.unpersist()
+                layout = edges.select("src", "dst").repartition(p, "src").cache()
 
-    if tol is None:
-        v = v.cache()
-        v.count()  # one job runs the whole superstep chain
-        for d in lazy_states:
-            d.unpersist()
-    edges.unpersist()
+            for step in range(max_iter):
+                contrib = v.select(
+                    F.col("id").alias("src"),
+                    F.try_divide(F.col("rank"), F.col("outdeg")).alias("w"),
+                )
+                msgs = (
+                    layout.join(F.broadcast(contrib) if bcast else contrib, "src")
+                    .groupBy(F.col("dst").alias("id"))
+                    .agg(F.sum("w").alias("s"))
+                )
+                # with tol, the old rank rides along for the delta probe
+                old = [] if tol is None else [F.col("rank").alias("old")]
+                nv = v.join(msgs, "id", "left").select(
+                    "id",
+                    "outdeg",
+                    (F.lit(RESET) + F.lit(DAMPING) * F.coalesce("s", F.lit(0.0)))
+                    .alias("rank"),
+                    *old,
+                )
+                if tol is not None:
+                    v, delta = jan.checkpoint(
+                        nv, probe=F.sum(F.abs(F.col("rank") - F.col("old")))
+                    )
+                    if delta is not None and delta < tol:
+                        break
+                elif bcast or (step + 1) % CHAIN == 0 or step + 1 == max_iter:
+                    v = jan.checkpoint(nv)
+                else:
+                    v = nv
+    finally:
+        layout.unpersist()
     return v.select("id", "rank")
 
 

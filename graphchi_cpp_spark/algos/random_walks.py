@@ -64,9 +64,7 @@ def random_walks(
     from graphchi_cpp_spark.partitioning import broadcast_row_cap
 
     # byte-derived cap: a (walk_id, cur) state row hashes at ~64 B
-    bcast_walks = walks.count() <= broadcast_row_cap(
-        64, "SPARK_GRAFT_WALKS_BCAST_MAX_ROWS"
-    )
+    bcast_walks = walks.count() <= broadcast_row_cap(walks.sparkSession, 64)
     visit_parts: list[DataFrame] = []
     for step in range(steps):
         w_side = F.broadcast(walks) if bcast_walks else walks

@@ -33,7 +33,7 @@ def khop_vertices(graph: PropertyGraph, seeds: DataFrame, hops: int) -> DataFram
     from graphchi_cpp_spark.partitioning import broadcast_row_cap
 
     # byte-derived cap: an (id, hop) row hashes at ~56 B
-    cap = broadcast_row_cap(56, "SPARK_GRAFT_KHOP_BCAST_MAX_ROWS")
+    cap = broadcast_row_cap(sym.sparkSession, 56)
     # lazy: the count below materializes the checkpoint in the same job
     reached = seeds.select("id", F.lit(0).alias("hop")).localCheckpoint(eager=False)
     frontier = reached.select("id")

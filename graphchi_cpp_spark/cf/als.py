@@ -326,7 +326,7 @@ def als(
 
     # byte-derived: a factor row (id + d doubles + array header) hashes
     # at ~(64 + 8d) B, so the cap shrinks with d automatically
-    bcast_cap = broadcast_row_cap(64 + 8 * d, "SPARK_GRAFT_ALS_BCAST_MAX_ROWS")
+    bcast_cap = broadcast_row_cap(ratings.sparkSession, 64 + 8 * d)
     from graphchi_cpp_spark.partitioning import adaptive_partitions
 
     # data-derived partition count for the two rating caches (guide §2);

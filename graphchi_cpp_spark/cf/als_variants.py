@@ -257,7 +257,7 @@ def als_coord(
         from graphchi_cpp_spark.partitioning import broadcast_row_cap
 
         # byte-derived, d-aware (see cf/als.py)
-        cap = broadcast_row_cap(64 + 8 * d, "SPARK_GRAFT_ALS_BCAST_MAX_ROWS")
+        cap = broadcast_row_cap(spark, 64 + 8 * d)
         r_u = r.repartition(p, "user").cache()
         r_i = r.repartition(p, "item").cache()
         user_f = _init_factors(

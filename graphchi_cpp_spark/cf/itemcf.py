@@ -148,7 +148,7 @@ def item_similarity(
     # guard (checkpointed inputs lose stats → Catalyst would sort-merge).
     # |ui| bounds #entities, and a (long, long) degree row hashes at
     # ~64 B — the cap approximates the broadcast byte budget.
-    small = ui.count() <= broadcast_row_cap(64)
+    small = ui.count() <= broadcast_row_cap(ui.sparkSession, 64)
     bcast = F.broadcast if small else (lambda df: df)
 
     a = ui.select("user", F.col("item").alias("item_a"))
@@ -276,8 +276,8 @@ def itemsim2rating(
     callers round at 6.
 
     Physical strategy: when the expanded similarity table fits the
-    broadcast row cap (``SPARK_GRAFT_SIMS_BCAST_MAX_ROWS``; default
-    byte-derived, see ``partitioning.broadcast_row_cap``), the user
+    broadcast row cap (byte-derived, see
+    ``partitioning.broadcast_row_cap``), the user
     history is hash-partitioned by user ONCE (dedup
     folded into that exchange) and everything downstream — the gather
     join against the BROADCAST sims, the per-(user, item) score
@@ -287,8 +287,6 @@ def itemsim2rating(
     intermediate of the query, never crosses the wire. Above the cap
     the shuffle plan (join on item, partial-aggregated groupBy) is kept.
     """
-    import os as _os
-
     both = sims.select("item_a", "item_b", "sim").unionByName(
         sims.select(
             F.col("item_b").alias("item_a"),
@@ -302,7 +300,7 @@ def itemsim2rating(
     from graphchi_cpp_spark.partitioning import broadcast_row_cap
 
     # byte-derived: an expanded (item_a, item_b, sim) row hashes at ~72 B
-    cap = broadcast_row_cap(72, "SPARK_GRAFT_SIMS_BCAST_MAX_ROWS")
+    cap = broadcast_row_cap(sims.sparkSession, 72)
     # sims is typically an eagerly-materialized table (memo/checkpoint)
     # so this count is a cheap scan, not a recompute
     if 2 * sims.count() <= cap:

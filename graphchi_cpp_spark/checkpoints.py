@@ -15,12 +15,13 @@ but ``DataFrame.unpersist()`` on the checkpointed frame does NOT free
 those blocks — they linger until the driver's ContextCleaner happens to
 GC the old RDD object. A loop that checkpoints every superstep therefore
 grows storage by ~|V| rows per superstep, the block-manager pressure
-that evicts hot cache partitions mid-job. ``CheckpointJanitor`` tracks
-which persistent RDD ids each checkpoint pinned (snapshot-diff of
-``SparkContext.getPersistentRDDs`` around the eager checkpoint — safe
-because the driver loop is single-threaded) and unpersists the PREVIOUS
-generation's blocks as soon as the new one has landed. The final
-generation is left alive: the returned DataFrame still reads from it.
+that evicts hot cache partitions mid-job. ``CheckpointJanitor`` records
+the RDD each checkpoint pinned (the ``LogicalRDD`` the checkpointed
+frame scans) and unpersists the PREVIOUS generation's blocks as soon as
+the new one has landed. The final generation is left alive: the
+returned DataFrame still reads from it. Caches that a checkpoint's job
+happens to populate first (a loop's edge layout, read by superstep 0)
+are not part of a generation: their owner unpersists them.
 
 Reference analog: GraphChi's engine reuses one bounded set of shard
 buffers per interval (``src/engine/graphchi_engine.hpp``) rather than
@@ -55,28 +56,23 @@ class CheckpointJanitor:
             if n == 0:
                 break                    # old generation already freed
 
-    ``checkpoint`` is :func:`materialize` plus the snapshot of the
-    persistent-RDD id set around it; the ids that appeared are the new
-    generation. The generation freed is always one behind, so the frame
-    the caller is still computing from keeps its blocks. Frames that
-    must outlive the next superstep (e.g. parts of a final union) go
-    through plain :func:`materialize` instead.
+    ``checkpoint`` is :func:`materialize` plus the id of the RDD the
+    checkpointed frame reads, which is the new generation. The
+    generation freed is always one behind, so the frame the caller is
+    still computing from keeps its blocks. Frames that must outlive the
+    next superstep (e.g. parts of a final union) go through plain
+    :func:`materialize` instead.
     """
 
     def __init__(self, spark) -> None:
         self.spark = spark
         self._prev_gen: set[int] = set()
 
-    def _ids(self) -> set[int]:
-        m = self.spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in m.keySet().toArray()}
-
     def checkpoint(self, df, probe=None, blocking: bool = False):
-        before = self._ids()
         out = materialize(df, probe)
-        new_gen = self._ids() - before
+        frame = out if probe is None else out[0]
         self.free(self._prev_gen, blocking)
-        self._prev_gen = new_gen
+        self._prev_gen = {int(frame._jdf.logicalPlan().rdd().id())}
         return out
 
     def free(self, ids: set[int], blocking: bool = False) -> None:

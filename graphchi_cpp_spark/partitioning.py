@@ -56,37 +56,25 @@ def adaptive_partitions(spark, n_rows: int, rpp: int | None = None) -> int:
     return max(1, min(conf, (int(n_rows) + rpp - 1) // rpp))
 
 
-def _mem_mb(s: str) -> int:
-    s = s.strip().lower()
-    mult = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
-    if s and s[-1] in mult:
-        return int(float(s[:-1]) * mult[s[-1]])
-    return int(int(s) / (1024 * 1024))  # bare bytes
-
-
-def broadcast_row_cap(bytes_per_row: int, env_var: str | None = None) -> int:
+def broadcast_row_cap(spark, bytes_per_row: int) -> int:
     """Row cap for a forced ``F.broadcast`` of an unbounded-at-scale table.
 
     A broadcast hash relation is built on the driver and replicated to
-    every executor, so the cap must approximate a BYTE budget, not a raw
-    row count (50M rows of (long, long, double) is ~3 GB built — an OOM
-    on memory-tight executors). Resolution order:
-
-    1. the site's own env var (operator-specific override), when set;
-    2. ``SPARK_GRAFT_BCAST_BUDGET_MB`` divided by the site's estimated
-       hashed-relation bytes/row (payload + ~56 B relation overhead);
-    3. default budget = 1/8 of the session heap (``SPARK_GRAFT_DRIVER_MEM``,
-       default 16g → 2 GiB budget — sized to the single-JVM local bench
-       host; on clusters set the budget to executor memory / 8).
+    every executor, so the cap is a BYTE budget divided by the site's
+    estimated hashed-relation bytes/row (payload + ~56 B relation
+    overhead): 50M rows of (long, long, double) is ~3 GB built — an OOM
+    on memory-tight executors. The budget is 1/8 of the live driver heap
+    (``Runtime.maxMemory``; a 16 GiB heap gives 2 GiB), or
+    ``SPARK_GRAFT_BCAST_BUDGET_MB`` where set (on clusters, executor
+    memory / 8).
     """
-    if env_var and os.environ.get(env_var):
-        return int(os.environ[env_var])
     budget_mb = os.environ.get("SPARK_GRAFT_BCAST_BUDGET_MB")
     if budget_mb is not None:
-        budget_mb = int(budget_mb)
+        budget = int(budget_mb) * 1024 * 1024
     else:
-        budget_mb = _mem_mb(os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")) // 8
-    return max(1, budget_mb * 1024 * 1024 // max(1, int(bytes_per_row)))
+        runtime = spark.sparkContext._jvm.java.lang.Runtime.getRuntime()
+        budget = int(runtime.maxMemory()) // 8
+    return max(1, budget // max(1, int(bytes_per_row)))
 
 
 @contextmanager

@@ -18,7 +18,11 @@ Spark-first mapping:
 - compact(): rewrite base applying buffered adds/deletes when the buffer
   or deleted fraction crosses the reference's thresholds (X3).
 - run_streaming_pagerank: foreachBatch-style loop — per batch, merge then
-  k supersteps warm-started from the previous ranks (X4).
+  k supersteps warm-started from the previous ranks (X4), through the
+  same ``algos.pagerank.pagerank_supersteps`` loop and plan rule as batch
+  PageRank. It passes the edge count the DynamicGraph already keeps, so
+  the plan costs no extra job; the old 5M-edge join-plan threshold is
+  gone (see ``algos/pagerank.py`` for why it misled).
 - With Structured Streaming, ``readStream ... foreachBatch(lambda df, id:
   dg.ingest_batch(df))`` plugs the same object into a real stream;
   backpressure = maxFilesPerTrigger (X1). The driver-testable path uses
@@ -126,105 +130,19 @@ def run_streaming_pagerank(
     (id, rank). Matches batch PageRank at the same total superstep count
     on the final graph ONLY in the limit; the streaming trace is the
     reference's evolving-graph semantics."""
-    import os as _os
+    from graphchi_cpp_spark.algos.pagerank import pagerank_supersteps
 
-    from graphchi_cpp_spark.algos.pagerank import BCAST_MAX_VERTS, DAMPING, RESET
-    from graphchi_cpp_spark.checkpoints import CheckpointJanitor
-
-    from graphchi_cpp_spark.partitioning import adaptive_partitions
-
-    spark = dg.base.sparkSession
-    jan = CheckpointJanitor(spark)
-    # The pagerank broadcast-contrib plan trades O(|E|) shuffled rows per
-    # superstep for a fixed per-superstep overhead (broadcast build +
-    # distribute + an extra job). That trade only pays past a few million
-    # edges — below the threshold the simple per-superstep join plan is
-    # strictly faster (measured at sf0.1, ~40k edges: 5.8s vs 13.1s for
-    # the broadcast plan), so the mode is chosen from the already-known
-    # ingested edge count, no extra job.
-    bcast_min_edges = int(
-        _os.environ.get("SPARK_GRAFT_STREAM_PR_BCAST_MIN_EDGES", 5_000_000)
-    )
     ranks: DataFrame | None = None
     for batch in batches:
         dg.ingest_batch(batch)
         if auto_compact and dg.should_compact():
             dg.compact()
-        g = dg.graph()
-        # memoized single-job stats (shared with should_compact above)
-        n_edges_hint = dg.base_count + dg.buffer_stats()[0]
-        use_bcast = n_edges_hint >= bcast_min_edges
-        if use_bcast:
-            # data-derived partition count for this batch's edge cache
-            # (guide §2) — the ingested-edge counter is already
-            # maintained, so no extra job; conf cap binds at scale
-            p = adaptive_partitions(spark, n_edges_hint)
-            # edges dst-partitioned + cached once per batch, contributions
-            # broadcast — zero |E|-row shuffles per superstep under the
-            # vertex row cap (algos/pagerank.py), shuffle fallback above
-            edges = g.edges.select("src", "dst").repartition(p, "dst").cache()
-            # populate NOW: the degree agg and the vertex derivation read
-            # edges in parallel subtrees of one job — an unpopulated cache
-            # would execute the DynamicGraph merge lineage once per consumer
-            edges.count()
-        else:
-            edges = g.edges.select("src", "dst").localCheckpoint(eager=True)
-        out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-            F.count("*").cast("double").alias("outdeg")
+        # the maintained counters bound |E| (memoized, shared with
+        # should_compact above): no extra job
+        n_edges = dg.base_count + dg.buffer_stats()[0]
+        ranks = pagerank_supersteps(
+            dg.graph().edges, n_edges, supersteps_per_batch, ranks=ranks
         )
-        v = (
-            PropertyGraph(edges).vertices.select("id")
-            .join(out_deg, "id", "left")
-            .select("id", F.coalesce("outdeg", F.lit(0.0)).alias("outdeg"))
-        )
-        if ranks is None:
-            v = v.withColumn("rank", F.lit(1.0))
-        else:  # warm start: carry previous ranks, new vertices start at 1
-            v = v.join(ranks, "id", "left").select(
-                "id", "outdeg", F.coalesce("rank", F.lit(1.0)).alias("rank")
-            )
-        v = jan.checkpoint(v.repartition(p, "id") if use_bcast else v)
-        bcast = use_bcast and v.count() <= BCAST_MAX_VERTS
-        for step in range(supersteps_per_batch):
-            contrib = v.select(
-                F.col("id").alias("src"),
-                F.try_divide(F.col("rank"), F.col("outdeg")).alias("m"),
-            )
-            if bcast:
-                contrib = F.broadcast(contrib)
-            msgs = (
-                edges.join(contrib, "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("m").alias("s"))
-            )
-            nv = v.join(msgs, "id", "left").select(
-                "id",
-                "outdeg",
-                (F.lit(RESET) + F.lit(DAMPING) * F.coalesce("s", F.lit(0.0))).alias(
-                    "rank"
-                ),
-            )
-            # broadcast mode NEEDS an eager cut per superstep (the
-            # contrib broadcast re-executes the full uncut lineage —
-            # algos/pagerank.py). The small-graph join mode chains
-            # supersteps LAZILY like _pagerank_shuffle's fixed-iteration
-            # path: duplicated v-subtrees share shuffle map stages, so
-            # the batch's supersteps collapse into the ONE ranks-
-            # checkpoint job below (was one eager job per superstep —
-            # pure per-job overhead at micro-batch scale). The chain is
-            # CUT every 3 supersteps: v appears twice per step (contrib
-            # + the outer join), so an uncut chain doubles the logical
-            # plan per step — 2^k subtrees stalls the PLANNER for large
-            # k (observed: supersteps_per_batch=30 never finished
-            # analysis). A cut every 3 bounds planning at 8 v-subtrees
-            # while keeping the common 3-superstep batch a single job.
-            if bcast or (step + 1) % 3 == 0 and step + 1 < supersteps_per_batch:
-                v = jan.checkpoint(nv)
-            else:
-                v = nv
-        ranks = v.select("id", "rank").localCheckpoint(eager=True)
-        if use_bcast:
-            edges.unpersist()
     return ranks
 
 

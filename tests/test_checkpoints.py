@@ -61,6 +61,32 @@ def test_janitor_frees_previous_generation_with_probe(spark):
     assert v.agg(F.sum("x")).collect()[0][0] == 6000
 
 
+def test_janitor_leaves_caches_its_checkpoints_populate(spark):
+    """A lazily cached frame that a checkpoint's job materializes first
+    (a loop's edge layout) belongs to its owner, not to that generation:
+    freeing it with the generation would make every later superstep
+    rebuild it."""
+    spark.catalog.clearCache()
+    sc = spark.sparkContext._jsc.sc()
+
+    def cached_rdds():
+        infos = sc.getRDDStorageInfo()
+        return {i.id() for i in infos if i.numCachedPartitions() > 0}
+
+    base = cached_rdds()
+    jan = CheckpointJanitor(spark)
+    layout = spark.range(1000).repartition(4, "id").cache()
+    v = jan.checkpoint(layout.select("id", F.lit(0).alias("x")))
+    for _ in range(3):
+        v = jan.checkpoint(
+            v.join(layout, "id").select("id", (F.col("x") + 1).alias("x"))
+        )
+    # the layout cache and the live generation, nothing else
+    assert len(cached_rdds() - base) == 2
+    assert v.agg(F.sum("x")).collect()[0][0] == 3000
+    layout.unpersist()
+
+
 def test_wcc_chain_job_budget_per_superstep(spark):
     """One Spark action per superstep: the probed checkpoint, plus the
     gather shuffle and the broadcast frontier that action runs. On a
@@ -86,3 +112,28 @@ def test_wcc_chain_job_budget_per_superstep(spark):
     # a second action per superstep (a separate count probe, or a
     # cache() chain re-checkpointed every few steps) exceeds this
     assert jobs / (n + 1) < 3.5, jobs
+
+
+def test_pagerank_job_budget_per_superstep(spark):
+    """Broadcast PageRank supersteps cost one action each: the eager
+    checkpoint, plus the contrib broadcast and the write-back exchange
+    that action runs (3 jobs). Three more supersteps must cost fewer
+    than 3.5 jobs each; a second action per superstep makes it 4."""
+    from graphchi_cpp_spark.algos.pagerank import pagerank
+    from graphchi_cpp_spark.graph import PropertyGraph
+
+    edges = [(i, i + 1) for i in range(30)] + [(30, 0), (5, 17)]
+    g = PropertyGraph.from_edges(spark.createDataFrame(edges, ["src", "dst"]))
+    sc = spark.sparkContext
+
+    def jobs(max_iter):
+        group = f"pagerank-budget-{max_iter}"
+        sc.setJobGroup(group, group)
+        try:
+            pagerank(g, max_iter=max_iter)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    j3, j6 = jobs(3), jobs(6)
+    assert (j6 - j3) / 3 < 3.5, (j3, j6)

@@ -212,15 +212,14 @@ def test_streaming_pagerank_matches_batch_on_final_graph(spark):
         assert s[k] == pytest.approx(b[k], abs=1e-4)  # converged to same fixpoint
 
 
-def test_streaming_pagerank_broadcast_mode(spark, monkeypatch):
-    """The ≥5M-edge broadcast-contrib path, forced via the env threshold:
-    exercises the per-batch dst-repartitioned edge cache + broadcast
-    supersteps (the scale path the bench's tiny stream never reaches —
-    a NameError hid here once)."""
-    from graphchi_cpp_spark.algos.pagerank import pagerank
+def test_streaming_pagerank_join_plan(spark, monkeypatch):
+    """The plan above the broadcast row cap, forced with a cap of 0:
+    each batch re-caches its edges by src and chains its supersteps
+    lazily (the scale path the bench's small stream never reaches)."""
+    import graphchi_cpp_spark.algos.pagerank as pr
     from graphchi_cpp_spark.graph import PropertyGraph
 
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_PR_BCAST_MIN_EDGES", "1")
+    monkeypatch.setattr(pr, "broadcast_row_cap", lambda spark, bytes_per_row: 0)
     base = spark.createDataFrame([(0, 1), (1, 2)], ["src", "dst"])
     batches = [
         spark.createDataFrame([(2, 0, "add")], ["src", "dst", "op"]),
@@ -228,7 +227,7 @@ def test_streaming_pagerank_broadcast_mode(spark, monkeypatch):
     ]
     dg = DynamicGraph(base)
     streamed = run_streaming_pagerank(dg, batches, supersteps_per_batch=30)
-    batch_ranks = pagerank(PropertyGraph.from_edges(dg.edges()), max_iter=60)
+    batch_ranks = pr.pagerank(PropertyGraph.from_edges(dg.edges()), max_iter=60)
     s = {r["id"]: r["rank"] for r in streamed.collect()}
     b = {r["id"]: r["rank"] for r in batch_ranks.collect()}
     for k in b:

@@ -8,6 +8,7 @@ Usage: python tools/check_correctness.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 import time
@@ -113,20 +114,23 @@ def main():
                    spark_rows=len(srows), oracle_rows=len(drows))
             n_pass += 1
 
-    # committable artifact in the driver's CORRECTNESS_r{N}.json shape —
-    # covers every registered query, not just the driver's sample.
-    # SPARK_GRAFT_CORRECTNESS_OUT writes a subset run to a named file
-    # (e.g. the touched-queries-at-sf0.1 gate committed per round).
-    out_override = os.environ.get("SPARK_GRAFT_CORRECTNESS_OUT")
-    if not only or out_override:
-        import json
-
-        out = out_override or os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "CORRECTNESS_local.json")
+    # committable artifact in the driver's CORRECTNESS_r{N}.json shape.
+    # A full run always rewrites CORRECTNESS_local.json (every registered
+    # query); SPARK_GRAFT_CORRECTNESS_OUT names an extra output, e.g. the
+    # touched-queries-at-sf0.1 gate committed per round. A subset run
+    # writes only that extra output, and records its subset under "only".
+    payload = {"sf_dir": sf_dir, "unix_time": int(time.time()),
+               "n_pass": n_pass, "n_rows_only": n_rows_only,
+               "n_fail": n_fail, "queries": results}
+    if only:
+        payload["only"] = sorted(only)
+    outs = [] if only else [os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "CORRECTNESS_local.json")]
+    if os.environ.get("SPARK_GRAFT_CORRECTNESS_OUT"):
+        outs.append(os.environ["SPARK_GRAFT_CORRECTNESS_OUT"])
+    for out in outs:
         with open(out, "w") as f:
-            json.dump({"sf_dir": sf_dir, "unix_time": int(time.time()),
-                       "n_pass": n_pass, "n_rows_only": n_rows_only,
-                       "n_fail": n_fail, "queries": results}, f, indent=2)
+            json.dump(payload, f, indent=2)
         print(f"wrote {out}")
     print(f"\n{n_pass} hash-verified, {n_rows_only} rows-only, "
           f"{n_fail} failed")
